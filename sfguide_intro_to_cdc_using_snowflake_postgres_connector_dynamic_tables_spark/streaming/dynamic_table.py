@@ -73,7 +73,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc_apply import latest_per_key
 from .store import ParquetTableStore
 
 #: Sentinel returned by ``incremental_refresh(emit_delta=True)`` when
@@ -704,12 +703,6 @@ class DynamicTableManager:
                 self.topk_refresh(name, deltas)
 
         pipeline.on_batch_applied(hook)
-
-
-def dedup_delta(delta: DataFrame, key: str) -> DataFrame:
-    """Latest state per key of a raw change batch (helper for callers
-    that need clean per-key deltas)."""
-    return latest_per_key(delta, key)
 
 
 def dynamic_table_from_sql(

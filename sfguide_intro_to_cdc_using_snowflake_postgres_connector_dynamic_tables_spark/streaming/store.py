@@ -24,6 +24,25 @@ row-group-pruned MERGE contract as Snowflake/Delta/Iceberg
 (``notebooks/0_start_here.ipynb:218`` REFRESH_MODE=INCREMENTAL), here
 with plain parquet + a JSON manifest standing in for the table format.
 
+Manifest fields (a non-partitioned version's manifest holds ``schema``
+only)::
+
+    key          partition (merge) key column
+    n_buckets    B; a row's bucket is pmod(murmur3(key), B)
+    partitions   {bucket: "w<N>-<hex>/__part=<bucket>"}, non-empty buckets
+    schema_dir   zero-row parquet marker, so empty/pruned reads are typed
+    schema       StructType JSON of the table (absent before r14)
+    zone_cols    columns with min/max stats (optional, sticky)
+    zones        {bucket: {col: [min, max]}}
+    file_zones   {bucket: {file: {col: [min, max]}}}, only for buckets an
+                 ``optimize(zorder_cols=...)`` clustered
+
+Every partitioned write stages its rows under a fresh ``w<N>-<hex>``
+directory and commits ``partitions = (base - replaced) | written``:
+buckets it did not replace carry forward with their zone stats, a
+replaced bucket that wrote no rows has emptied, and a written bucket
+outside ``replaced`` fails the commit (``_commit_buckets``).
+
 Commit protocol (both layouts): write data (and manifest) fully, then
 ``os.replace`` the version pointer -- readers either see v<N> or
 v<N+1>, never a torn write, and a refresh that crashes mid-write
@@ -282,7 +301,7 @@ class ParquetTableStore:
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def _evolved_schema_dir(
-        self, spark: SparkSession, tdir: str, m: dict, rows: DataFrame, stage: str
+        self, spark: SparkSession, name: str, m: dict, rows: DataFrame, stage: str
     ) -> tuple[str, dict]:
         """Schema evolution for incremental writes: if ``rows``
         introduce columns the current schema lacks, stamp a fresh
@@ -300,18 +319,16 @@ class ParquetTableStore:
             old_cols = set(old_schema.names)
             marker = None
         else:
-            marker = spark.read.parquet(os.path.join(tdir, schema_dir))
+            marker = spark.read.parquet(os.path.join(self._table_dir(name), schema_dir))
             old_schema = marker.schema
             old_cols = set(marker.columns)
         if set(rows.columns) - old_cols:
-            schema_dir = f"{stage}-schema"
             if marker is None:
                 marker = spark.createDataFrame([], old_schema)
             union = marker.limit(0).unionByName(
                 rows.limit(0), allowMissingColumns=True
             )
-            union.write.parquet(os.path.join(tdir, schema_dir))
-            return schema_dir, union.schema.jsonValue()
+            return self._fresh_marker(name, stage, union), union.schema.jsonValue()
         return schema_dir, old_schema.jsonValue()
 
     @contextlib.contextmanager
@@ -522,22 +539,34 @@ class ParquetTableStore:
                 continue
         return pinned
 
-    def bucket_paths(self, name: str, bucket_ids) -> list[str]:
-        """Data directories of the given hash buckets in the current
-        version (buckets with no rows have no directory and are
-        skipped).  Raises on unpartitioned tables."""
+    def _partitioned_manifest(self, name: str) -> tuple[int, dict]:
+        """(current version, its manifest) of a partitioned table -- ONE
+        pointer read, so everything a caller derives from the manifest
+        (bucket dirs, schema marker, schema) belongs to one version."""
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
         m = self._read_manifest(name, v)
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned")
+        return v, m
+
+    def _bucket_dirs(self, name: str, m: dict, bucket_ids) -> list[str]:
+        """Data directories of the given hash buckets in manifest ``m``
+        (buckets with no rows have no directory and are skipped)."""
         tdir = self._table_dir(name)
         return [
             os.path.join(tdir, m["partitions"][str(b)])
             for b in bucket_ids
             if str(b) in m["partitions"]
         ]
+
+    def bucket_paths(self, name: str, bucket_ids) -> list[str]:
+        """Data directories of the given hash buckets in the current
+        version (buckets with no rows have no directory and are
+        skipped).  Raises on unpartitioned tables."""
+        _v, m = self._partitioned_manifest(name)
+        return self._bucket_dirs(name, m, bucket_ids)
 
     # -- zone maps (per-bucket min/max pruning on NON-KEY columns) -----------
 
@@ -661,10 +690,7 @@ class ParquetTableStore:
         manifest is returned so callers derive everything else (the
         read schema, above all) from the SAME version read that
         resolved the paths."""
-        v = self.current_version(name)
-        m = self._read_manifest(name, v) if v is not None else None
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned")
+        _v, m = self._partitioned_manifest(name)
         keep = self._zone_pruned_buckets(m, col, lower, upper)
         tdir = self._table_dir(name)
         lo = self._zone_value(lower) if lower is not None else None
@@ -747,11 +773,8 @@ class ParquetTableStore:
         ``merge``'s O(delta-buckets) writes: a consumer that knows which
         key buckets it cares about pays I/O proportional to those
         buckets, not to the table."""
-        v = self.current_version(name)
-        m = self._read_manifest(name, v) if v is not None else None
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned")
-        paths = self.bucket_paths(name, bucket_ids)
+        _v, m = self._partitioned_manifest(name)
+        paths = self._bucket_dirs(name, m, bucket_ids)
         paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
         return self._read_parquet(spark, paths, self._manifest_schema(m))
 
@@ -895,6 +918,104 @@ class ParquetTableStore:
         across sessions, so bucket membership never migrates."""
         return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
 
+    def _write_stage(
+        self, name: str, version: int, rows: DataFrame, key: str, n_buckets: int
+    ) -> str:
+        """Write ``rows`` hash-bucketed into a fresh ``w<version>-<hex>``
+        stage dir (one ``__part=<b>`` subdir per non-empty bucket) and
+        return the stage id."""
+        stage = f"w{version}-{uuid.uuid4().hex[:8]}"
+        (
+            rows.withColumn("__part", self.bucket_expr(key, n_buckets))
+            .write.partitionBy("__part")
+            .parquet(os.path.join(self._table_dir(name), stage))
+        )
+        return stage
+
+    def _fresh_marker(self, name: str, stage: str, df: DataFrame) -> str:
+        """Write ``df``'s zero-row schema marker beside ``stage`` and
+        return its dir."""
+        schema_dir = f"{stage}-schema"
+        df.limit(0).write.parquet(os.path.join(self._table_dir(name), schema_dir))
+        return schema_dir
+
+    def _commit_buckets(
+        self,
+        spark: SparkSession,
+        name: str,
+        version: int,
+        key: str,
+        n_buckets: int,
+        stage: str,
+        marker: tuple[str, dict | None],
+        zone_cols: list[str] | None,
+        base: dict | None = None,
+        replaced=(),
+        clustered: bool = False,
+    ) -> int:
+        """Build, write and commit the manifest of ``version`` from the
+        rows staged under ``stage`` -- every partitioned writer ends
+        here.  ``base`` is the manifest being edited (None for a full
+        rewrite) and ``replaced`` the bucket ids whose stored rows the
+        stage supersedes; ``marker`` is ``(schema_dir, schema_json)``
+        (a None schema is left out, as pre-r14 manifests lack it).
+        ``clustered``: the rows were laid out within each bucket, so
+        per-file zone stats are worth recording.
+
+        A staged bucket outside ``replaced`` raises ValueError before
+        any manifest is written: repointing it would drop the stored
+        rows nobody read.  The caller's ``_claimed`` block then
+        releases the claim and the next commit's GC removes the stage."""
+        tdir = self._table_dir(name)
+        stage_dir = os.path.join(tdir, stage)
+        written = {
+            entry.split("=", 1)[1]: f"{stage}/{entry}"
+            for entry in os.listdir(stage_dir)
+            if entry.startswith("__part=")
+        }
+        carried: dict = {}
+        if base is not None:
+            replaced = {str(b) for b in replaced}
+            stray = sorted(set(written) - replaced, key=int)
+            if stray:
+                raise ValueError(
+                    f"{name} v{version}: rows staged for bucket(s) {stray} that "
+                    "the write does not replace -- committing would drop their "
+                    "stored rows (a touched_buckets list missing an upsert's "
+                    "bucket?)"
+                )
+            carried = {
+                b: d for b, d in base["partitions"].items() if b not in replaced
+            }
+        schema_dir, schema = marker
+        manifest = {
+            "key": key,
+            "n_buckets": n_buckets,
+            "partitions": {**carried, **written},
+            "schema_dir": schema_dir,
+        }
+        if schema is not None:
+            manifest["schema"] = schema
+        if zone_cols:
+
+            def carry(field: str) -> dict:
+                return {
+                    b: s for b, s in (base or {}).get(field, {}).items() if b in carried
+                }
+
+            zones = carry("zones")
+            zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
+            file_zones = carry("file_zones")
+            if clustered:
+                file_zones.update(self._file_zones(spark, stage_dir, tdir, zone_cols))
+            manifest["zone_cols"] = list(zone_cols)
+            manifest["zones"] = zones
+            if file_zones:
+                manifest["file_zones"] = file_zones
+        self._write_manifest(name, version, manifest)
+        self._commit(name, version)
+        return version
+
     def overwrite(
         self,
         name: str,
@@ -930,35 +1051,12 @@ class ParquetTableStore:
                 self._write_manifest(name, v, {"schema": df.schema.jsonValue()})
                 self._commit(name, v)
                 return v
-            stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
-            (
-                df.withColumn("__part", self.bucket_expr(partition_key, n_buckets))
-                .write.partitionBy("__part")
-                .parquet(stage_dir)
+            stage = self._write_stage(name, v, df, partition_key, n_buckets)
+            marker = (self._fresh_marker(name, stage, df), df.schema.jsonValue())
+            return self._commit_buckets(
+                df.sparkSession, name, v, partition_key, n_buckets, stage, marker,
+                zone_cols,
             )
-            schema_dir = f"{stage}-schema"
-            df.limit(0).write.parquet(os.path.join(tdir, schema_dir))
-            partitions = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
-            manifest = {
-                "key": partition_key,
-                "n_buckets": n_buckets,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-                "schema": df.schema.jsonValue(),
-            }
-            if zone_cols:
-                manifest["zone_cols"] = list(zone_cols)
-                manifest["zones"] = self._bucket_zones(
-                    df.sparkSession, stage_dir, zone_cols
-                )
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
 
     def optimize(
         self,
@@ -987,6 +1085,13 @@ class ParquetTableStore:
         re-clustering; see ``maintain_clustering``).  Bucket
         membership is untouched either way, so merges and pruned
         reads are unaffected.  Atomic via the version pointer.
+
+        With ``zorder_cols`` rows are clustered within each bucket, so
+        per-file stats are tight: the manifest records them
+        (``file_zones``) and ``read_pruned`` prunes FILES inside
+        surviving buckets -- pair with
+        ``writer_options={"maxRecordsPerFile": N}`` to control the
+        clustering granularity.
         """
         spec = self.partition_spec(name)
         if spec is None:
@@ -1007,9 +1112,7 @@ class ParquetTableStore:
 
             df = with_morton(df, zorder_cols, bits)
         with self._claimed(name, v):
-            tdir = self._table_dir(name)
             stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
             width = B if buckets is None else max(len(buckets), 1)
             out = df.repartition(width, self.bucket_expr(key, B).alias("__part"))
             out = out.withColumn("__part", self.bucket_expr(key, B))
@@ -1024,78 +1127,22 @@ class ParquetTableStore:
             # min-max pruning works at row-group granularity
             for k_opt, v_opt in (writer_options or {}).items():
                 writer = writer.option(k_opt, v_opt)
-            writer.parquet(stage_dir)
-            written = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
+            writer.parquet(os.path.join(self._table_dir(name), stage))
+            # for pre-r14 manifests only the full rewrite knows the true
+            # union schema (an incremental pass read just its buckets)
+            schema = old_m.get("schema")
             if buckets is None:
-                schema_dir = f"{stage}-schema"
-                self.read(spark, name).limit(0).write.parquet(
-                    os.path.join(tdir, schema_dir)
+                marker = (
+                    self._fresh_marker(name, stage, self.read(spark, name)),
+                    schema or base_schema,
                 )
-                partitions = written
+                base = None
             else:
-                # a re-cluster never evolves the schema: carry the marker
-                schema_dir = old_m["schema_dir"]
-                partitions = dict(old_m["partitions"])
-                partitions.update(written)
-            manifest = {
-                "key": key,
-                "n_buckets": B,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-            }
-            # carry the recorded schema; for pre-r14 manifests only the
-            # full rewrite knows the true union schema (an incremental
-            # pass read just the touched buckets)
-            if old_m.get("schema"):
-                manifest["schema"] = old_m["schema"]
-            elif buckets is None:
-                manifest["schema"] = base_schema
-            zone_cols = (old_m or {}).get("zone_cols")
-            if zone_cols:
-                manifest["zone_cols"] = zone_cols
-                zones = (
-                    {}
-                    if buckets is None
-                    else {
-                        b: z
-                        for b, z in old_m.get("zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                )
-                zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                manifest["zones"] = zones
-                # untouched buckets' clustered files stay on disk, so
-                # their file-level stats carry regardless of whether
-                # THIS pass clusters (an unclustered incremental
-                # compaction must not blind the reader to them)
-                file_zones = (
-                    {}
-                    if buckets is None
-                    else {
-                        b: fz
-                        for b, fz in old_m.get("file_zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                )
-                if zorder_cols:
-                    # rows are clustered within each bucket, so per-file
-                    # stats are tight -- record them and read_pruned
-                    # prunes FILES inside surviving buckets (the layout
-                    # lever for range probes on a hash-bucketed table;
-                    # pair with writer_options={"maxRecordsPerFile": N}
-                    # to control the clustering granularity)
-                    file_zones.update(
-                        self._file_zones(spark, stage_dir, tdir, zone_cols)
-                    )
-                if file_zones:
-                    manifest["file_zones"] = file_zones
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
+                marker, base = (old_m["schema_dir"], schema), old_m
+            return self._commit_buckets(
+                spark, name, v, key, B, stage, marker, old_m.get("zone_cols"),
+                base=base, replaced=buckets or (), clustered=bool(zorder_cols),
+            )
 
     def maintain_clustering(
         self,
@@ -1173,14 +1220,8 @@ class ParquetTableStore:
         docs legitimately share a band value and an upsert-by-key merge
         would evict them).  Only the buckets receiving new rows are
         read and rewritten; every other bucket carries forward."""
-        v = self.current_version(name)
-        if v is None:
-            raise FileNotFoundError(f"append target {name!r} does not exist")
-        m = self._read_manifest(name, v)
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned; use overwrite()")
+        v, m = self._partitioned_manifest(name)
         key, B = m["key"], m["n_buckets"]
-        tdir = self._table_dir(name)
         keys = rows.select(key).cache()
         try:
             touched = sorted(
@@ -1188,11 +1229,7 @@ class ParquetTableStore:
             )
             if not touched:
                 return v
-            old_paths = [
-                os.path.join(tdir, m["partitions"][str(b)])
-                for b in touched
-                if str(b) in m["partitions"]
-            ]
+            old_paths = self._bucket_dirs(name, m, touched)
             if old_paths:
                 old_rows = self._read_parquet(
                     spark, old_paths, self._manifest_schema(m)
@@ -1202,52 +1239,12 @@ class ParquetTableStore:
                 new_rows = rows
             nv = v + 1
             with self._claimed(name, nv):
-                stage = f"w{nv}-{uuid.uuid4().hex[:8]}"
-                stage_dir = os.path.join(tdir, stage)
-                (
-                    new_rows.withColumn("__part", self.bucket_expr(key, B))
-                    .write.partitionBy("__part")
-                    .parquet(stage_dir)
+                stage = self._write_stage(name, nv, new_rows, key, B)
+                marker = self._evolved_schema_dir(spark, name, m, rows, stage)
+                return self._commit_buckets(
+                    spark, name, nv, key, B, stage, marker, m.get("zone_cols"),
+                    base=m, replaced=touched,
                 )
-                written = {
-                    entry.split("=", 1)[1]: f"{stage}/{entry}"
-                    for entry in os.listdir(stage_dir)
-                    if entry.startswith("__part=")
-                }
-                partitions = dict(m["partitions"])
-                partitions.update(written)
-                schema_dir, schema_json = self._evolved_schema_dir(
-                    spark, tdir, m, rows, stage
-                )
-                manifest = {
-                    "key": key,
-                    "n_buckets": B,
-                    "partitions": partitions,
-                    "schema_dir": schema_dir,
-                    "schema": schema_json,
-                }
-                zone_cols = m.get("zone_cols")
-                if zone_cols:
-                    zones = {
-                        b: z
-                        for b, z in m.get("zones", {}).items()
-                        if b not in written
-                    }
-                    zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                    manifest["zone_cols"] = zone_cols
-                    manifest["zones"] = zones
-                    # rewritten buckets lose file-level granularity until
-                    # the next optimize; untouched ones keep theirs
-                    file_zones = {
-                        b: fz
-                        for b, fz in m.get("file_zones", {}).items()
-                        if b not in written
-                    }
-                    if file_zones:
-                        manifest["file_zones"] = file_zones
-                self._write_manifest(name, nv, manifest)
-                self._commit(name, nv)
-                return nv
         finally:
             keys.unpersist()
 
@@ -1274,36 +1271,12 @@ class ParquetTableStore:
         df = self.read(spark, name)
         v = self.current_version(name) + 1
         with self._claimed(name, v):
-            tdir = self._table_dir(name)
-            stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
-            (
-                df.withColumn("__part", self.bucket_expr(key, n_buckets))
-                .write.partitionBy("__part")
-                .parquet(stage_dir)
+            stage = self._write_stage(name, v, df, key, n_buckets)
+            marker = (self._fresh_marker(name, stage, df), df.schema.jsonValue())
+            zone_cols = (self._read_manifest(name, v - 1) or {}).get("zone_cols")
+            return self._commit_buckets(
+                spark, name, v, key, n_buckets, stage, marker, zone_cols
             )
-            schema_dir = f"{stage}-schema"
-            df.limit(0).write.parquet(os.path.join(tdir, schema_dir))
-            partitions = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
-            manifest = {
-                "key": key,
-                "n_buckets": n_buckets,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-                "schema": df.schema.jsonValue(),
-            }
-            old_m = self._read_manifest(name, v - 1)
-            zone_cols = (old_m or {}).get("zone_cols")
-            if zone_cols:
-                manifest["zone_cols"] = zone_cols
-                manifest["zones"] = self._bucket_zones(spark, stage_dir, zone_cols)
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
 
     def merge(
         self,
@@ -1327,19 +1300,18 @@ class ParquetTableStore:
         stats pass), skipping this method's own bucket-id collect.
         CONTRACT: the list must contain every bucket of an upsert
         row's key AND every bucket where a ``touched_keys`` key is
-        currently STORED -- buckets outside it are carried over
-        verbatim, so a missing bucket would silently skip deletes in
-        it.  (A touched key that is neither stored nor re-upserted may
-        legitimately be absent: its bucket has nothing to delete or
-        add, and skipping its read+rewrite is the point.)"""
-        v = self.current_version(name)
-        if v is None:
-            raise FileNotFoundError(f"merge target {name!r} does not exist")
-        m = self._read_manifest(name, v)
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned; use overwrite()")
+        currently STORED -- buckets outside it are neither read nor
+        rewritten.  A missing upsert bucket raises ValueError and
+        commits nothing: the stage holds only that bucket's upserts,
+        so repointing the bucket to it would LOSE the bucket's stored
+        rows, not merely skip its deletes.  A missing bucket that holds
+        a stored touched key but no upsert cannot be detected without
+        reading it: its deletes are silently skipped.  (A touched key
+        that is neither stored nor re-upserted may legitimately be
+        absent: its bucket has nothing to delete or add, and skipping
+        its read+rewrite is the point.)"""
+        v, m = self._partitioned_manifest(name)
         key, B = m["key"], m["n_buckets"]
-        tdir = self._table_dir(name)
 
         # no .distinct() on the key set: duplicates don't change the
         # anti-join, and dropping it removes a shuffle -- only the
@@ -1362,11 +1334,7 @@ class ParquetTableStore:
             )
             if not touched:
                 return v
-            old_paths = [
-                os.path.join(tdir, m["partitions"][str(b)])
-                for b in touched
-                if str(b) in m["partitions"]
-            ]
+            old_paths = self._bucket_dirs(name, m, touched)
             if old_paths:
                 # manifest schema (r14+): buckets straddling an ADD
                 # COLUMN read under the union schema with NULLs for
@@ -1382,56 +1350,12 @@ class ParquetTableStore:
 
             nv = v + 1
             with self._claimed(name, nv):
-                stage = f"w{nv}-{uuid.uuid4().hex[:8]}"
-                stage_dir = os.path.join(tdir, stage)
-                (
-                    new_rows.withColumn("__part", self.bucket_expr(key, B))
-                    .write.partitionBy("__part")
-                    .parquet(stage_dir)
+                stage = self._write_stage(name, nv, new_rows, key, B)
+                marker = self._evolved_schema_dir(spark, name, m, new_rows, stage)
+                return self._commit_buckets(
+                    spark, name, nv, key, B, stage, marker, m.get("zone_cols"),
+                    base=m, replaced=touched,
                 )
-                written = {
-                    entry.split("=", 1)[1]: f"{stage}/{entry}"
-                    for entry in os.listdir(stage_dir)
-                    if entry.startswith("__part=")
-                }
-                partitions = dict(m["partitions"])
-                for b in touched:
-                    partitions.pop(str(b), None)  # bucket may have emptied
-                partitions.update(written)
-                schema_dir, schema_json = self._evolved_schema_dir(
-                    spark, tdir, m, new_rows, stage
-                )
-                manifest = {
-                    "key": key,
-                    "n_buckets": B,
-                    "partitions": partitions,
-                    "schema_dir": schema_dir,
-                    "schema": schema_json,
-                }
-                zone_cols = m.get("zone_cols")
-                if zone_cols:
-                    # untouched buckets keep their stats; rewritten ones
-                    # recompute from the staged files only
-                    zones = {
-                        b: z
-                        for b, z in m.get("zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                    zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                    manifest["zone_cols"] = zone_cols
-                    manifest["zones"] = zones
-                    # rewritten buckets lose file-level granularity until
-                    # the next optimize; untouched ones keep theirs
-                    file_zones = {
-                        b: fz
-                        for b, fz in m.get("file_zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                    if file_zones:
-                        manifest["file_zones"] = file_zones
-                self._write_manifest(name, nv, manifest)
-                self._commit(name, nv)
-                return nv
         finally:
             if touched_buckets is None:
                 keys.unpersist()

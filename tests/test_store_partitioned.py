@@ -8,8 +8,10 @@ every other bucket's directory reference carries over byte-identical.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import re
 
 import pytest
 
@@ -568,3 +570,141 @@ def test_table_changes_replay_closure_random(spark, tmp_path):
         for r in cdf:
             if r["op"] == "U":
                 assert snap1.get(r["k"]) != r["v"]
+
+
+# -- manifest contract ---------------------------------------------------------
+#
+# Every partitioned writer commits the same manifest fields under the same
+# bucket-replacement rule.  ``manifest_contract.json`` holds the committed
+# manifests of one small fixture driven through each writer path, with the
+# random parts of stage ids and parquet file names normalised away.
+
+_STAGE_ID = re.compile(r"\bw(\d+)-[0-9a-f]{8}\b")
+_FILE_UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+
+
+def _normalised(manifest: dict) -> dict:
+    text = _FILE_UUID.sub("<uuid>", json.dumps(manifest))
+    return json.loads(_STAGE_ID.sub(r"w\1-<stage>", text))
+
+
+def _contract_manifests(spark, root: str) -> dict:
+    store = ParquetTableStore(root)
+    df = spark.createDataFrame(
+        [(i, i * 10 % 70, datetime.date(2024, 1, 1 + i % 28)) for i in range(24)],
+        "id long, amt long, day date",
+    )
+    got: dict = {}
+
+    def snap(label, name):
+        got[label] = _normalised(_manifest(store, name))
+
+    store.overwrite("plain", df, partition_key="id", n_buckets=4)
+    snap("overwrite", "plain")
+    store.overwrite("z", df, partition_key="id", n_buckets=4, zone_cols=["amt", "day"])
+    snap("overwrite_zone_cols", "z")
+    store.optimize(
+        spark, "z", zorder_cols=["day"], writer_options={"maxRecordsPerFile": "3"}
+    )
+    snap("optimize_zorder", "z")
+    # empty bucket 1 (delete all of its keys) and update one key elsewhere
+    ids = df.select("id", ParquetTableStore.bucket_expr("id", 4).alias("b")).collect()
+    b1 = sorted(r["id"] for r in ids if r["b"] == 1)
+    upd = next(r["id"] for r in ids if r["b"] == 2)
+    store.merge(
+        spark,
+        "z",
+        spark.createDataFrame([(upd, 999, datetime.date(2024, 3, 1))], df.schema),
+        spark.createDataFrame([(k,) for k in b1 + [upd]], "id long"),
+    )
+    snap("merge_empties_bucket", "z")
+    store.append(
+        spark,
+        "z",
+        spark.createDataFrame(
+            [(100, 5, datetime.date(2023, 12, 31), "n")],
+            "id long, amt long, day date, note string",
+        ),
+    )
+    snap("append_evolves_schema", "z")
+    store.optimize(spark, "z", buckets=[2])
+    snap("optimize_incremental", "z")
+    store.optimize(spark, "z")
+    snap("optimize_full", "z")
+    store.rebucket(spark, "z", 8)
+    snap("rebucket", "z")
+    return got
+
+
+_EXPECTED_MANIFESTS = os.path.join(os.path.dirname(__file__), "manifest_contract.json")
+
+
+def test_manifest_contract_per_writer(spark, tmp_path):
+    got = _contract_manifests(spark, str(tmp_path / "s"))
+    with open(_EXPECTED_MANIFESTS) as f:
+        expected = json.load(f)
+    assert set(got) == set(expected)
+    for label, manifest in expected.items():
+        assert got[label] == manifest, label
+
+
+def test_merge_rejects_short_bucket_list(spark, tmp_path):
+    """A caller-supplied bucket list that misses an upsert's bucket must
+    fail before anything commits: the staged write holds only the
+    upsert for that bucket, so repointing the bucket to it would drop
+    the bucket's stored rows."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    df = spark.range(40).select(F.col("id").alias("k"), F.lit("old").alias("v"))
+    store.overwrite("t", df, partition_key="k", n_buckets=4)
+    v0, rows0 = store.current_version("t"), _rows(store.read(spark, "t"))
+
+    upserts = spark.createDataFrame([(3, "new"), (1000, "new")], "k long, v string")
+    touched = upserts.select("k")
+    buckets = sorted(
+        r[0]
+        for r in touched.select(ParquetTableStore.bucket_expr("k", 4)).distinct().collect()
+    )
+    assert len(buckets) == 2
+    short = buckets[:1]
+    with pytest.raises(ValueError, match="touched_buckets"):
+        store.merge(spark, "t", upserts, touched, touched_buckets=short)
+    assert store.current_version("t") == v0
+    assert _rows(store.read(spark, "t")) == rows0
+
+    # the failed call released its claim: the corrected call commits
+    assert store.merge(spark, "t", upserts, touched, touched_buckets=buckets) == v0 + 1
+    got = {r["k"]: r["v"] for r in store.read(spark, "t").collect()}
+    assert len(got) == 41 and got[3] == "new" and got[1000] == "new"
+
+
+def test_read_buckets_resolves_one_version(spark, tmp_path, monkeypatch):
+    """Paths, schema marker and schema of a bucket read come from ONE
+    manifest: a commit landing mid-call must not pair the new version's
+    bucket dirs with the old version's schema."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.createDataFrame([(k, "a") for k in range(8)], "k long, v string")
+    store.overwrite("t", base, partition_key="k", n_buckets=4)
+    store.append(
+        spark, "t", spark.createDataFrame([(k, "b", 1.0) for k in range(8, 16)],
+                                          "k long, v string, x double"),
+    )
+    m1 = store._read_manifest("t", 1)
+    # the first pointer read sees v1, every later one the freshly committed v2
+    reads = iter([1])
+    real = store.current_version
+    monkeypatch.setattr(store, "current_version", lambda n: next(reads, None) or real(n))
+    seen = {}
+
+    def spy(spark_, paths, schema):
+        seen["paths"], seen["schema"] = list(paths), schema
+        return real_read(spark_, paths, schema)
+
+    real_read = store._read_parquet
+    monkeypatch.setattr(store, "_read_parquet", spy)
+    out = store.read_buckets(spark, "t", [0, 1, 2, 3])
+    tdir = os.path.join(store.root, "t")
+    assert sorted(seen["paths"]) == sorted(
+        os.path.join(tdir, rel) for rel in [*m1["partitions"].values(), m1["schema_dir"]]
+    )
+    assert seen["schema"].jsonValue() == m1["schema"]
+    assert out.columns == ["k", "v"]
