@@ -29,6 +29,12 @@ from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spar
 )
 
 
+def _p95(xs) -> float:
+    """Nearest-rank 95th percentile: the ceil(0.95 n)-th smallest value."""
+    xs = sorted(xs)
+    return xs[max(0, -(-95 * len(xs) // 100) - 1)]
+
+
 def _setup_cdc(
     spark,
     tmp: str,
@@ -308,7 +314,6 @@ def _soak_cdc(
             }
         live_bytes = sum(m[0] for m in before.values())
         n_rows = batches * rows_per_batch
-        lags_sorted = sorted(lags)
         return {
             "batches": batches,
             "rows_per_batch": rows_per_batch,
@@ -316,7 +321,7 @@ def _soak_cdc(
             "elapsed_sec": round(elapsed, 2),
             "rows_per_min": round(n_rows / elapsed * 60.0),
             "lag_p50_sec": round(statistics.median(lags), 2),
-            "lag_p95_sec": round(lags_sorted[int(0.95 * (len(lags) - 1))], 2),
+            "lag_p95_sec": round(_p95(lags), 2),
             "lag_max_sec": round(max(lags), 2),
             "bytes_per_refresh_avg": int(sum(bytes_per_refresh) / len(bytes_per_refresh)),
             "bytes_per_refresh_max": max(bytes_per_refresh),
@@ -562,7 +567,6 @@ def _soak_topk(
                 spurious_refill_ticks += 1
         elapsed = time.perf_counter() - t_all
         raise_total = sum(sat_raise_times)
-        lags_sorted = sorted(lags)
         return {
             "ticks": ticks,
             "groups": groups,
@@ -570,7 +574,7 @@ def _soak_topk(
             "elapsed_sec": round(elapsed, 2),
             "ticks_per_sec": round(ticks / elapsed, 3),
             "tick_p50_sec": round(statistics.median(lags), 3),
-            "tick_p95_sec": round(lags_sorted[int(0.95 * (len(lags) - 1))], 3),
+            "tick_p95_sec": round(_p95(lags), 3),
             "sat_raise_write_p50_sec": round(statistics.median(sat_raise_times), 3),
             "sat_raise_write_total_sec": round(raise_total, 2),
             "ticks_per_sec_without_raise_pass": round(
@@ -738,16 +742,15 @@ def _soak_media(
             "index_rows_total": idx_total,
         }
 
-    lags_s = sorted(lags)
     return {
         "ticks": ticks,
         "rows_per_tick": rows_per_tick + 1,
         "rows_total": total_rows,
         "rows_stored": stored,
         "rows_per_min": round(total_rows / soak_wall * 60.0, 1),
-        "lag_p50_sec": round(statistics.median(lags_s), 2),
-        "lag_p95_sec": round(lags_s[max(0, int(len(lags_s) * 0.95) - 1)], 2),
-        "lag_max_sec": round(lags_s[-1], 2),
+        "lag_p50_sec": round(statistics.median(lags), 2),
+        "lag_p95_sec": round(_p95(lags), 2),
+        "lag_max_sec": round(max(lags), 2),
         "decode_rows_per_sec": round(n_dec / decode_wall, 1),
         "probe_io": probe_rows,
     }

@@ -341,16 +341,22 @@ def lsh_pairs_from_tokens(
     # ~1 s of pure overhead while the stage they widen finishes in
     # well under that (measured A/B at sf0.1), so the pins gate on
     # the input already being at least reducer-count wide (the same
-    # partition-count proxy _spread_small_input uses, inverted; one
-    # driver-side getNumPartitions per call, no job).
+    # partition-count proxy _spread_small_input uses, inverted; see
+    # the ``pin=None`` note below for what the probe costs).
     sig = tok.groupBy("doc_id").agg(*per_doc_aggs).cache()
     _SIG_CACHES.append(sig)
+    # int() is safe: Spark 4.1 rejects a non-integer value such as
+    # "auto" for this conf when it is set (INVALID_CONF_VALUE.
+    # TYPE_MISMATCH), so it always reads back as an integer.
     n_red = int(tok.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # ``pin=None`` auto-detects via one driver-side getNumPartitions
-    # (analyzer work, no job).  Per-tick STREAMING callers pass
-    # pin=False explicitly: their inputs are delta-sized by contract,
-    # and even the analyzer cost does not belong on a tick path
-    # (VERDICT r14 item 4's _spread_small_input note, same class).
+    # ``pin=None`` auto-detects via ``tok.rdd.getNumPartitions()``.  On
+    # a scan-only input that is driver-side planning, no job; on an
+    # input with an exchange AQE materializes the stages below it to
+    # plan the RDD (one or more jobs), so callers whose token input is
+    # already shuffled should pass ``pin`` explicitly.  Per-tick
+    # STREAMING callers pass pin=False: their inputs are delta-sized by
+    # contract, and even the planning cost does not belong on a tick
+    # path (VERDICT r14 item 4's _spread_small_input note, same class).
     if pin is None:
         pin = tok.rdd.getNumPartitions() >= n_red
     if not wide and narrow_max_tokens is not None:

@@ -16,6 +16,12 @@ the result, so micro-batch parallelism is free.  At scale the window
 shuffles on the PK (unavoidable for per-key ordering) and the merge
 anti-join shuffles on the same key, so AQE reuses the partitioning;
 with a bucketed store both sides co-locate.
+
+The CDC pipeline applies a batch through ``split_changes`` and
+``ParquetTableStore.merge`` (which covers both table layouts), so the
+stored result is committed against one resolved base version;
+``apply_changes`` is the same upsert/delete rule as a pure DataFrame
+function over an explicit snapshot.
 """
 
 from __future__ import annotations

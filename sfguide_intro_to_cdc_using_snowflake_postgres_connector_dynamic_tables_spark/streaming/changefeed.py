@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.cdc_schemas import PRIMARY_KEYS, TABLE_SCHEMAS
-from .cdc_apply import apply_changes, split_changes
+from .cdc_apply import split_changes
 from .store import ParquetTableStore
 
 FEED_SCHEMA = T.StructType(
@@ -586,19 +586,10 @@ class CDCPipeline:
             else F.col(f.name)
             for f in cur.schema.fields
         ]
-        out = cur.select(*cols)
-        spec = self.store.partition_spec(table)
-        if spec:
-            _key, n_buckets = spec
-            self.store.overwrite(
-                table,
-                out,
-                partition_key=self.primary_keys[table],
-                n_buckets=n_buckets,
-                zone_cols=self.zone_spec.get(table),
-            )
-        else:
-            self.store.overwrite(table, out)
+        # the partition spec is sticky in overwrite
+        self.store.overwrite(
+            table, cur.select(*cols), zone_cols=self.zone_spec.get(table)
+        )
 
     # -- snapshot-LSN offset persistence ------------------------------------
 
@@ -795,16 +786,11 @@ class CDCPipeline:
                 changes = parse_table_changes(
                     envelope, table, self.table_schema(table)
                 ).cache()
-                key = self.primary_keys[table]
-                if self.store.exists(table) and self.store.partition_spec(table):
-                    # partition-pruned MERGE: only touched buckets rewrite
-                    upserts, touched = split_changes(changes, key)
+                upserts, touched = split_changes(changes, self.primary_keys[table])
+                if self.store.exists(table):
                     self.store.merge(self.spark, table, upserts, touched)
                 else:
-                    current = (
-                        self.store.read(self.spark, table) if self.store.exists(table) else None
-                    )
-                    self.store.overwrite(table, apply_changes(current, changes, key))
+                    self.store.overwrite(table, upserts)
                 deltas[table] = changes
 
             # Dimensions still apply BEFORE the fact (the dim+fact

@@ -64,15 +64,7 @@ def _seen_fps_for_batch(
             partition_key="content_fp",
             n_buckets=n_buckets,
         )
-    _key, B = store.partition_spec(fp_name)
-    # <= B distinct bucket ids -- bounded by the bucket count, not the batch
-    batch_buckets = [
-        r[0]
-        for r in keep.select(store.bucket_expr("content_fp", B).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    return store.read_buckets(spark, fp_name, batch_buckets)
+    return store.read_buckets_for(spark, fp_name, keep)
 
 
 def bands_table_name(
@@ -152,16 +144,9 @@ def _cross_pairs(
         F.col("doc_id").alias("stored_id"),
         F.lit(1.0).alias("jaccard"),
     ).limit(0)
-    _key, B = store.partition_spec(bands_name)
-    batch_buckets = [
-        r[0]
-        for r in new_bands.select(store.bucket_expr("band", B).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    if not batch_buckets:
-        return empty
-    stored_bands = store.read_buckets(spark, bands_name, batch_buckets)
+    # no batch bands -> a statically empty probe, so the candidate
+    # check below runs no job
+    stored_bands = store.read_buckets_for(spark, bands_name, new_bands)
     if exclude_batch_ids:
         stored_bands = stored_bands.join(
             new_docs.select("doc_id"), "doc_id", "left_anti"
@@ -176,19 +161,9 @@ def _cross_pairs(
     # fetch ONLY the candidate stored docs (bucket-pruned by the
     # main table's doc_id partitioning when available)
     cand_ids = cand.select(F.col("stored_id").alias("doc_id")).distinct()
-    spec = store.partition_spec(table)
-    if spec is not None:
-        _mk, MB = spec
-        id_buckets = [
-            r[0]
-            for r in cand_ids.select(store.bucket_expr("doc_id", MB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        stored_docs = store.read_buckets(spark, table, id_buckets)
-    else:
-        stored_docs = store.read(spark, table)
-    stored_docs = stored_docs.join(cand_ids, "doc_id", "left_semi")
+    stored_docs = store.read_buckets_for(spark, table, cand_ids).join(
+        cand_ids, "doc_id", "left_semi"
+    )
 
     # exact token-set Jaccard verify of candidate pairs (same token
     # definition and arithmetic as dedup.lsh_pairs_from_tokens, so an
@@ -508,18 +483,7 @@ def decontaminate_incremental(
         new_train = grams.filter(F.col("split") == "train")
 
         # direction 1: new train docs vs (stored + batch) test grams
-        _k, TB = store.partition_spec(tg)
-        probe_buckets = [
-            r[0]
-            for r in new_train.select(store.bucket_expr("gram", TB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        stored_test = (
-            store.read_buckets(spark, tg, probe_buckets)
-            if probe_buckets
-            else new_test.select("gram").limit(0)
-        )
+        stored_test = store.read_buckets_for(spark, tg, new_train)
         bench = stored_test.select("gram").unionByName(
             new_test.select("gram")
         ).distinct()
@@ -528,22 +492,12 @@ def decontaminate_incremental(
         )
 
         # direction 2 (retro): new test grams vs stored train postings
-        _k2, RB = store.partition_spec(rg)
-        retro_buckets = [
-            r[0]
-            for r in new_test.select(store.bucket_expr("gram", RB).alias("b"))
+        contaminated_stored = (
+            store.read_buckets_for(spark, rg, new_test)
+            .join(new_test.select("gram").distinct(), "gram")
+            .select("doc_id")
             .distinct()
-            .collect()
-        ]
-        if retro_buckets:
-            stored_train = store.read_buckets(spark, rg, retro_buckets)
-            contaminated_stored = (
-                stored_train.join(new_test.select("gram").distinct(), "gram")
-                .select("doc_id")
-                .distinct()
-            )
-        else:
-            contaminated_stored = contaminated_batch.limit(0)
+        )
 
         out = contaminated_batch.select(
             "doc_id", F.lit("batch").alias("origin")
@@ -565,19 +519,8 @@ def decontaminate_incremental(
             # anti-join is bucket-pruned to the batch's own gram
             # buckets, so it stays O(batch), the increment contract.
             batch_test = new_test.select("gram").distinct()
-            append_buckets = [
-                r[0]
-                for r in batch_test.select(
-                    store.bucket_expr("gram", TB).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if append_buckets:
-                already = store.read_buckets(spark, tg, append_buckets)
-                batch_test = batch_test.join(
-                    already.select("gram"), "gram", "left_anti"
-                )
+            already = store.read_buckets_for(spark, tg, batch_test)
+            batch_test = batch_test.join(already.select("gram"), "gram", "left_anti")
             store.append(spark, tg, batch_test)
             clean_train = new_train.join(
                 contaminated_batch, "doc_id", "left_anti"
@@ -589,21 +532,10 @@ def decontaminate_incremental(
             # (consumers end in distinct) but the index grows per
             # replay.  Anti-join on the composite key, bucket-pruned to
             # the batch's own gram buckets -- still O(batch).
-            clean_buckets = [
-                r[0]
-                for r in clean_train.select(
-                    store.bucket_expr("gram", RB).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if clean_buckets:
-                stored_rg = store.read_buckets(spark, rg, clean_buckets)
-                clean_train = clean_train.join(
-                    stored_rg.select("doc_id", "gram"),
-                    ["doc_id", "gram"],
-                    "left_anti",
-                )
+            stored_rg = store.read_buckets_for(spark, rg, clean_train)
+            clean_train = clean_train.join(
+                stored_rg.select("doc_id", "gram"), ["doc_id", "gram"], "left_anti"
+            )
             store.append(spark, rg, clean_train)
             # retro-flagged stored postings stay in the index: their
             # docs are already reported (re-reports are harmless and
@@ -671,18 +603,8 @@ def _write_semantic_index(
         # re-append is a no-op instead of duplicate index growth
         # (cell assignment is deterministic per doc, so (doc_id, cell)
         # identifies the row)
-        _k, B = store.partition_spec(name)
-        probe = [
-            r[0]
-            for r in idx.select(store.bucket_expr("cell", B).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if probe:
-            already = store.read_buckets(spark, name, probe).select(
-                "doc_id", "cell"
-            )
-            idx = idx.join(already, ["doc_id", "cell"], "left_anti")
+        already = store.read_buckets_for(spark, name, idx).select("doc_id", "cell")
+        idx = idx.join(already, ["doc_id", "cell"], "left_anti")
         store.append(spark, name, idx)
 
 
@@ -755,17 +677,10 @@ def _semantic_filter(
 
         # (b) probe ONLY the stored cell buckets this batch touches
         assigned = assign_cells(kept_emb, centroids, "embedding", out_col="cell")
-        _key, B = store.partition_spec(cells_name)
-        batch_buckets = [
-            r[0]
-            for r in assigned.select(store.bucket_expr("cell", B).alias("b"))
-            .distinct()
-            .collect()
-        ]
         # a REPLAYED batch may already be in the cell index (appends
         # commit before the fp batch-done marker); a doc must never
         # semantically match its own stored copy
-        stored_idx = store.read_buckets(spark, cells_name, batch_buckets).join(
+        stored_idx = store.read_buckets_for(spark, cells_name, assigned).join(
             new_rows.select("doc_id"), "doc_id", "left_anti"
         )
         both = assigned.select(
@@ -989,20 +904,10 @@ def ingest_batch(
                 band_rows = band_keys_for_docs(
                     new_rows, num_hashes=num_hashes, band_size=band_size, wide=wide
                 )
-                _kb, BB = store.partition_spec(bn)
-                probe = [
-                    r[0]
-                    for r in band_rows.select(
-                        store.bucket_expr("band", BB).alias("b")
-                    ).distinct().collect()
-                ]
-                if probe:
-                    already = store.read_buckets(spark, bn, probe).select(
-                        "doc_id", "band"
-                    )
-                    band_rows = band_rows.join(
-                        already, ["doc_id", "band"], "left_anti"
-                    )
+                already = store.read_buckets_for(spark, bn, band_rows).select(
+                    "doc_id", "band"
+                )
+                band_rows = band_rows.join(already, ["doc_id", "band"], "left_anti")
                 store.append(spark, bn, band_rows)
             if semantic and sem_centroids is not None:
                 # centroids threaded from _semantic_filter (no re-read);
@@ -1012,17 +917,7 @@ def ingest_batch(
                     store, spark, table, new_rows, sem_centroids,
                     sem_dim, n_buckets, bootstrap=False,
                 )
-            if store.partition_spec(table) is None:
-                # legacy unpartitioned table: no bucket manifest to merge
-                # into -- fall back to a documented full rewrite
-                merged = (
-                    store.read(spark, table)
-                    .join(new_rows.select("doc_id"), "doc_id", "left_anti")
-                    .unionByName(new_rows)
-                )
-                store.overwrite(table, merged)
-            else:
-                store.merge(spark, table, new_rows, new_rows.select("doc_id"))
+            store.merge(spark, table, new_rows, new_rows.select("doc_id"))
             fps = new_rows.select("content_fp")
             store.merge(spark, fp_name, fps, fps)
         finally:

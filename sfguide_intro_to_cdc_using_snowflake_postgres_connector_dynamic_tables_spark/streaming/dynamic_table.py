@@ -392,25 +392,15 @@ class DynamicTableManager:
                 # branch must bump the version too.
                 self._log_refresh(name, "NO_CHANGE", t0)
             else:
-                if spec:
-                    # partition-pruned: only buckets holding affected
-                    # keys are read + rewritten; untouched buckets
-                    # carry over.  The bucket set rode the stats pass
-                    # above -- no extra collect action here.
-                    self.store.merge(
-                        self.spark,
-                        name,
-                        recomputed,
-                        affected_view_keys,
-                        touched_buckets=touched_buckets,
-                    )
-                else:
-                    kept = view.join(
-                        F.broadcast(affected_view_keys),
-                        on=dt.view_key,
-                        how="left_anti",
-                    )
-                    self.store.overwrite(name, kept.unionByName(recomputed))
+                # a partitioned view's bucket set rode the stats pass
+                # above -- no extra collect action here
+                self.store.merge(
+                    self.spark,
+                    name,
+                    recomputed,
+                    affected_view_keys,
+                    touched_buckets=touched_buckets,
+                )
                 self._log_refresh(name, "INCREMENTAL", t0)
 
             if not emit_delta:

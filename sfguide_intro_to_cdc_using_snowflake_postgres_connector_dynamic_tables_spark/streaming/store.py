@@ -43,6 +43,14 @@ buckets it did not replace carry forward with their zone stats, a
 replaced bucket that wrote no rows has emptied, and a written bucket
 outside ``replaced`` fails the commit (``_commit_buckets``).
 
+Key-to-bucket routing lives only in this module.  ``read_buckets_for``
+answers "which stored rows could hold these keys" (the buckets the keys
+hash into, or the whole snapshot of an unpartitioned table), and
+``append`` / ``merge`` derive their touched buckets with the same
+helper, each from one manifest read.  ``merge`` covers both layouts, so
+callers apply keyed changes without branching on how a table is
+stored.
+
 Commit protocol (both layouts): write data (and manifest) fully, then
 ``os.replace`` the version pointer -- readers either see v<N> or
 v<N+1>, never a torn write, and a refresh that crashes mid-write
@@ -419,7 +427,13 @@ class ParquetTableStore:
         return m["key"], m["n_buckets"]
 
     def _read_version(self, spark: SparkSession, name: str, v: int) -> DataFrame:
-        m = self._read_manifest(name, v)
+        return self._read_snapshot(spark, name, v, self._read_manifest(name, v))
+
+    def _read_snapshot(
+        self, spark: SparkSession, name: str, v: int, m: dict | None
+    ) -> DataFrame:
+        """All rows of version ``v``, whose manifest (None for legacy
+        unmanifested versions) the caller already read."""
         tdir = self._table_dir(name)
         if m is None:
             return spark.read.parquet(os.path.join(tdir, f"v{v}"))
@@ -539,14 +553,18 @@ class ParquetTableStore:
                 continue
         return pinned
 
-    def _partitioned_manifest(self, name: str) -> tuple[int, dict]:
-        """(current version, its manifest) of a partitioned table -- ONE
-        pointer read, so everything a caller derives from the manifest
-        (bucket dirs, schema marker, schema) belongs to one version."""
+    def _current_manifest(self, name: str) -> tuple[int, dict | None]:
+        """(current version, its manifest or None) -- ONE pointer read,
+        so everything a caller derives from the manifest (layout,
+        bucket dirs, schema marker, schema) belongs to one version."""
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
-        m = self._read_manifest(name, v)
+        return v, self._read_manifest(name, v)
+
+    def _partitioned_manifest(self, name: str) -> tuple[int, dict]:
+        """``_current_manifest`` of a table that must be partitioned."""
+        v, m = self._current_manifest(name)
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned")
         return v, m
@@ -774,9 +792,32 @@ class ParquetTableStore:
         key buckets it cares about pays I/O proportional to those
         buckets, not to the table."""
         _v, m = self._partitioned_manifest(name)
+        return self._read_bucket_dirs(spark, name, m, bucket_ids)
+
+    def _read_bucket_dirs(
+        self, spark: SparkSession, name: str, m: dict, bucket_ids
+    ) -> DataFrame:
         paths = self._bucket_dirs(name, m, bucket_ids)
         paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
         return self._read_parquet(spark, paths, self._manifest_schema(m))
+
+    def read_buckets_for(
+        self, spark: SparkSession, name: str, keys: DataFrame
+    ) -> DataFrame:
+        """The stored rows that could hold ``keys``: a partitioned
+        table's buckets that ``keys``' partition-key column hashes into
+        (one <= B-row job to collect the bucket ids), an unpartitioned
+        table's whole snapshot (no job).  The bucket count and the
+        bucket dirs come from one manifest read.  Typed like
+        ``read_buckets``; no keys give a statically empty frame, which
+        Spark's optimizer prunes out of any join a caller runs
+        against it."""
+        v, m = self._current_manifest(name)
+        if m is None or "key" not in m:
+            return self._read_snapshot(spark, name, v, m)
+        buckets = self._key_buckets(keys, m["key"], m["n_buckets"])
+        df = self._read_bucket_dirs(spark, name, m, buckets)
+        return df if buckets else df.limit(0)
 
     def versions(self, name: str) -> list[int]:
         """Committed versions still readable on disk, oldest first.
@@ -918,6 +959,16 @@ class ParquetTableStore:
         across sessions, so bucket membership never migrates."""
         return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
 
+    def _key_buckets(self, keys: DataFrame, key: str, n_buckets: int) -> list[int]:
+        """Sorted bucket ids of ``keys``' ``key`` column: one job that
+        collects <= ``n_buckets`` rows."""
+        return sorted(
+            r[0]
+            for r in keys.select(self.bucket_expr(key, n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+
     def _write_stage(
         self, name: str, version: int, rows: DataFrame, key: str, n_buckets: int
     ) -> str:
@@ -938,6 +989,17 @@ class ParquetTableStore:
         schema_dir = f"{stage}-schema"
         df.limit(0).write.parquet(os.path.join(self._table_dir(name), schema_dir))
         return schema_dir
+
+    def _write_snapshot(self, name: str, version: int, df: DataFrame) -> int:
+        """Write ``df`` as the unpartitioned ``v<version>`` and commit it
+        under the caller's claim."""
+        path = os.path.join(self._table_dir(name), f"v{version}")
+        shutil.rmtree(path, ignore_errors=True)  # orphan from a crashed commit
+        df.write.mode("overwrite").parquet(path)
+        # schema-only manifest: readers skip footer inference
+        self._write_manifest(name, version, {"schema": df.schema.jsonValue()})
+        self._commit(name, version)
+        return version
 
     def _commit_buckets(
         self,
@@ -1044,13 +1106,7 @@ class ParquetTableStore:
             if partition_key is None and spec is not None:
                 partition_key, n_buckets = spec
             if partition_key is None:
-                path = os.path.join(tdir, f"v{v}")
-                shutil.rmtree(path, ignore_errors=True)  # orphan from a crashed commit
-                df.write.mode("overwrite").parquet(path)
-                # schema-only manifest: readers skip footer inference
-                self._write_manifest(name, v, {"schema": df.schema.jsonValue()})
-                self._commit(name, v)
-                return v
+                return self._write_snapshot(name, v, df)
             stage = self._write_stage(name, v, df, partition_key, n_buckets)
             marker = (self._fresh_marker(name, stage, df), df.schema.jsonValue())
             return self._commit_buckets(
@@ -1222,31 +1278,23 @@ class ParquetTableStore:
         read and rewritten; every other bucket carries forward."""
         v, m = self._partitioned_manifest(name)
         key, B = m["key"], m["n_buckets"]
-        keys = rows.select(key).cache()
-        try:
-            touched = sorted(
-                r[0] for r in keys.select(self.bucket_expr(key, B).alias("b")).distinct().collect()
+        touched = self._key_buckets(rows, key, B)
+        if not touched:
+            return v
+        old_paths = self._bucket_dirs(name, m, touched)
+        if old_paths:
+            old_rows = self._read_parquet(spark, old_paths, self._manifest_schema(m))
+            new_rows = old_rows.unionByName(rows, allowMissingColumns=True)
+        else:
+            new_rows = rows
+        nv = v + 1
+        with self._claimed(name, nv):
+            stage = self._write_stage(name, nv, new_rows, key, B)
+            marker = self._evolved_schema_dir(spark, name, m, rows, stage)
+            return self._commit_buckets(
+                spark, name, nv, key, B, stage, marker, m.get("zone_cols"),
+                base=m, replaced=touched,
             )
-            if not touched:
-                return v
-            old_paths = self._bucket_dirs(name, m, touched)
-            if old_paths:
-                old_rows = self._read_parquet(
-                    spark, old_paths, self._manifest_schema(m)
-                )
-                new_rows = old_rows.unionByName(rows, allowMissingColumns=True)
-            else:
-                new_rows = rows
-            nv = v + 1
-            with self._claimed(name, nv):
-                stage = self._write_stage(name, nv, new_rows, key, B)
-                marker = self._evolved_schema_dir(spark, name, m, rows, stage)
-                return self._commit_buckets(
-                    spark, name, nv, key, B, stage, marker, m.get("zone_cols"),
-                    base=m, replaced=touched,
-                )
-        finally:
-            keys.unpersist()
 
     def rebucket(self, spark: SparkSession, name: str, n_buckets: int) -> int:
         """Re-hash a partitioned table into a new bucket count.
@@ -1286,18 +1334,29 @@ class ParquetTableStore:
         touched_keys: DataFrame,
         touched_buckets: list[int] | None = None,
     ) -> int:
-        """Partition-pruned MERGE into a partitioned table.
+        """Keyed MERGE: rows of ``touched_keys`` (single key column) are
+        deleted, then ``upserts`` inserted -- the standard upsert/delete
+        contract (keys absent from ``upserts`` stay deleted).
+        ``touched_keys`` must include every upsert key, as
+        ``split_changes`` and every caller here guarantee: the
+        partitioned layout also deletes the stored rows of an upsert
+        key it lacks (it reads that key's bucket anyway), the
+        unpartitioned layout would keep them beside the upsert.  The
+        base version is resolved once and the result commits as
+        ``base + 1``, so a commit that lands in between raises
+        ConcurrentWriteError instead of being overwritten.
 
-        Rows of ``touched_keys`` (single key column) are deleted, then
-        ``upserts`` inserted -- the standard upsert/delete contract
-        (keys absent from ``upserts`` stay deleted).  Only the hash
-        buckets containing touched keys are read, rewritten, and
-        repointed in the new manifest; every other bucket's directory
-        carries over untouched, so write I/O is O(delta buckets).
+        Partitioned table: only the hash buckets containing touched
+        keys are read, rewritten, and repointed in the new manifest;
+        every other bucket's directory carries over untouched, so write
+        I/O is O(delta buckets).  Unpartitioned table: the whole
+        snapshot is rewritten with no bucket job (and a new version is
+        committed even when nothing changed).
 
-        ``touched_buckets``: bucket ids a caller already computed in
-        an action it ran anyway (the dynamic-table refresh's no-op
-        stats pass), skipping this method's own bucket-id collect.
+        ``touched_buckets`` (partitioned tables; ignored otherwise):
+        bucket ids a caller already computed in an action it ran anyway
+        (the dynamic-table refresh's no-op stats pass), skipping this
+        method's own bucket-id collect.
         CONTRACT: the list must contain every bucket of an upsert
         row's key AND every bucket where a ``touched_keys`` key is
         currently STORED -- buckets outside it are neither read nor
@@ -1310,7 +1369,18 @@ class ParquetTableStore:
         that is neither stored nor re-upserted may legitimately be
         absent: its bucket has nothing to delete or add, and skipping
         its read+rewrite is the point.)"""
-        v, m = self._partitioned_manifest(name)
+        v, m = self._current_manifest(name)
+        if m is None or "key" not in m:
+            # touched_keys alone: adding the upsert keys would run the
+            # upserts' lineage (a CDC batch's latest-per-key window)
+            # once more, one more Spark job per call
+            kept = self._read_snapshot(spark, name, v, m).join(
+                F.broadcast(touched_keys), on=touched_keys.columns[0], how="left_anti"
+            )
+            with self._claimed(name, v + 1):
+                return self._write_snapshot(
+                    name, v + 1, kept.unionByName(upserts, allowMissingColumns=True)
+                )
         key, B = m["key"], m["n_buckets"]
 
         # no .distinct() on the key set: duplicates don't change the
@@ -1325,12 +1395,7 @@ class ParquetTableStore:
             touched = (
                 sorted({int(x) for x in touched_buckets})
                 if touched_buckets is not None
-                else sorted(
-                    r[0]
-                    for r in keys.select(
-                        self.bucket_expr(key, B).alias("b")
-                    ).distinct().collect()
-                )
+                else self._key_buckets(keys, key, B)
             )
             if not touched:
                 return v

@@ -282,20 +282,21 @@ def test_crash_mid_batch_then_replay_converges(spark, pipeline):
     p.apply_envelope_batch(_envelope_df(spark, log[0]), batch_id=0)
     view_before = _sorted_rows(mgr.read("customer_purchase_summary"))
 
-    orig_overwrite = store.overwrite
+    # the fact table exists, so the pipeline writes it through merge
+    orig_merge = store.merge
 
-    def crashing_overwrite(table, df, *a, **k):
+    def crashing_merge(spark_, table, *a, **k):
         if table == "transactions":
             raise RuntimeError("injected crash before fact write")
-        return orig_overwrite(table, df, *a, **k)
+        return orig_merge(spark_, table, *a, **k)
 
-    store.overwrite = crashing_overwrite
+    store.merge = crashing_merge
     env = _envelope_df(spark, log[1])
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             p.apply_envelope_batch(env, batch_id=1)
     finally:
-        store.overwrite = orig_overwrite
+        store.merge = orig_merge
 
     # the crash died before any hook: the view must still be at batch-0
     assert _sorted_rows(mgr.read("customer_purchase_summary")) == view_before

@@ -31,11 +31,11 @@ from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spar
     ParquetTableStore,
 )
 
-# Fast-tier policy (r15): this whole module is a crash-injection /
-# randomized-differential / end-to-end marathon -- the coverage the
-# FULL suite owns.  The driver's budgeted run uses the default
-# `-m "not slow"` tier (pytest.ini); run everything with `-m ""`.
-pytestmark = pytest.mark.slow
+# Fast-tier policy: this module is crash-injection coverage, which the
+# FULL suite (`-m ""`) owns.  One fixed case stays in the default
+# `-m "not slow"` tier (pytest.ini): the crash-retry over the
+# unpartitioned ("overwrite") chain, whose view refresh runs the
+# store's unpartitioned merge.  Every other case is marked slow.
 
 
 TX = "op string, lsn long, t_id long, c_id long, amount double"
@@ -64,7 +64,12 @@ def _rows(df):
     return sorted(tuple(str(v) for v in r) for r in df.select(*cols).collect())
 
 
-@pytest.fixture(params=[4, 0], ids=["partitioned", "overwrite"])
+@pytest.fixture(
+    params=[
+        pytest.param(4, id="partitioned", marks=pytest.mark.slow),
+        pytest.param(0, id="overwrite"),
+    ]
+)
 def chain(spark, tmp_path, request):
     store = ParquetTableStore(str(tmp_path / "s"))
     tx = spark.createDataFrame(
@@ -123,6 +128,7 @@ def test_crash_between_levels_then_full_tick_retry(spark, chain):
     assert _rows(mgr.read("bands")) == _rows(_full_bands(spark, store))
 
 
+@pytest.mark.slow
 def test_noop_refresh_skips_commit_and_logs_no_change(spark, chain):
     """A delta whose recompute leaves the view byte-identical must not
     advance the view version (NO_CHANGE), while a value-changing delta

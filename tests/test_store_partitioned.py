@@ -708,3 +708,100 @@ def test_read_buckets_resolves_one_version(spark, tmp_path, monkeypatch):
     )
     assert seen["schema"].jsonValue() == m1["schema"]
     assert out.columns == ["k", "v"]
+
+
+def _jobs_run(spark, fn):
+    """(fn's result, Spark jobs it ran) -- counted under a job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"read_buckets_for-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows_of(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_read_buckets_for_partitioned_reads_the_keys_buckets(spark, tmp_path):
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(40)], "k long, v string")
+    store.overwrite("t", base, partition_key="k", n_buckets=8)
+    keys = spark.createDataFrame([(3,), (17,), (3,), (99,)], "k long")
+    ids = sorted(
+        r[0] for r in keys.select(F.pmod(F.hash("k"), F.lit(8))).distinct().collect()
+    )
+    got, jobs = _jobs_run(spark, lambda: store.read_buckets_for(spark, "t", keys))
+    assert jobs >= 1  # the bucket-id collect
+    assert got.schema == store.read_buckets(spark, "t", ids).schema
+    assert _rows_of(got) == _rows_of(store.read_buckets(spark, "t", ids))
+    assert {3, 17} <= {r["k"] for r in got.collect()}
+
+
+def test_read_buckets_for_unpartitioned_is_the_snapshot(spark, tmp_path):
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(10)], "k long, v string")
+    store.overwrite("t", base)
+    keys = spark.createDataFrame([(3,)], "k long")
+    got, jobs = _jobs_run(spark, lambda: store.read_buckets_for(spark, "t", keys))
+    assert jobs == 0
+    assert _rows_of(got) == _rows_of(base)
+
+
+def test_read_buckets_for_empty_keys_is_typed_and_empty(spark, tmp_path):
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(10)], "k long, v string")
+    store.overwrite("t", base, partition_key="k", n_buckets=4)
+    got = store.read_buckets_for(spark, "t", spark.createDataFrame([], "k long"))
+    assert got.schema == store.read(spark, "t").schema
+    assert got.count() == 0
+    # statically empty: a join against it is pruned, so probing with it
+    # runs no job
+    probe = base.join(got, "k")
+    hit, jobs = _jobs_run(spark, probe.isEmpty)
+    assert hit and jobs == 0
+
+
+def test_read_buckets_for_resolves_one_version(spark, tmp_path, monkeypatch):
+    """The bucket count the keys hash with and the bucket dirs read come
+    from ONE manifest: a rebucket (8 -> 4) committing mid-call must not
+    route keys with one version's B into the other version's buckets."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(40)], "k long, v string")
+    store.overwrite("t", base, partition_key="k", n_buckets=8)
+    store.rebucket(spark, "t", 4)
+    m1 = store._read_manifest("t", 1)
+    # the first pointer read sees v1, every later one the rebucketed v2
+    reads = iter([1])
+    real = store.current_version
+    monkeypatch.setattr(store, "current_version", lambda n: next(reads, None) or real(n))
+    hashed_with = []
+
+    def bucket_spy(key, n_buckets):
+        hashed_with.append(n_buckets)
+        return ParquetTableStore.bucket_expr(key, n_buckets)
+
+    monkeypatch.setattr(store, "bucket_expr", bucket_spy)
+    seen = {}
+    real_read = store._read_parquet
+
+    def read_spy(spark_, paths, schema):
+        seen["paths"] = list(paths)
+        return real_read(spark_, paths, schema)
+
+    monkeypatch.setattr(store, "_read_parquet", read_spy)
+    keys = spark.createDataFrame([(3,), (17,)], "k long")
+    got = store.read_buckets_for(spark, "t", keys)
+    assert hashed_with == [8]
+    ids = {r[0] for r in keys.select(F.pmod(F.hash("k"), F.lit(8))).collect()}
+    tdir = os.path.join(store.root, "t")
+    assert sorted(seen["paths"]) == sorted(
+        [os.path.join(tdir, m1["partitions"][str(b)]) for b in ids]
+        + [os.path.join(tdir, m1["schema_dir"])]
+    )
+    assert {3, 17} <= {r["k"] for r in got.collect()}

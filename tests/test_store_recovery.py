@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
@@ -176,10 +177,9 @@ def test_claim_markers_follow_version_retention(spark, tmp_path):
     assert markers == ["commit-claim-v3", "commit-claim-v4"]
 
 
-def test_concurrent_merge_is_guarded(spark, tmp_path):
-    """The bucket-pruned merge path goes through the same claim gate."""
-    import pytest
-
+@pytest.mark.parametrize("partition_key", ["k", None])
+def test_concurrent_merge_is_guarded(spark, tmp_path, partition_key):
+    """Both merge layouts go through the same claim gate."""
     from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
         ConcurrentWriteError,
     )
@@ -188,7 +188,7 @@ def test_concurrent_merge_is_guarded(spark, tmp_path):
     a = ParquetTableStore(root)
     b = ParquetTableStore(root)
     df = spark.range(100).withColumn("k", F.col("id").cast("string"))
-    a.overwrite("t", df, partition_key="k", n_buckets=4)
+    a.overwrite("t", df, partition_key=partition_key, n_buckets=4)
     b._claim_version("t", 2)
     ups = spark.range(3).withColumn("k", F.col("id").cast("string"))
     with pytest.raises(ConcurrentWriteError):
@@ -220,7 +220,8 @@ def test_failed_write_releases_claim_for_retry(spark, tmp_path):
     assert store.read(spark, "t").count() == 20
 
 
-def test_two_writer_retry_loops_converge(spark, tmp_path):
+@pytest.mark.parametrize("partition_key", ["k", None])
+def test_two_writer_retry_loops_converge(spark, tmp_path, partition_key):
     """Two writers interleave upserts through the documented
     optimistic-retry loop; every batch must land exactly once and the
     final table must equal the sequential fold of all applied batches
@@ -237,7 +238,7 @@ def test_two_writer_retry_loops_converge(spark, tmp_path):
     base = spark.range(40).withColumnRenamed("id", "k").withColumn(
         "val", F.col("k") * 10
     )
-    writers[0].overwrite("t", base, partition_key="k", n_buckets=4)
+    writers[0].overwrite("t", base, partition_key=partition_key, n_buckets=4)
 
     model = {i: i * 10 for i in range(40)}
     batches = []
@@ -264,6 +265,41 @@ def test_two_writer_retry_loops_converge(spark, tmp_path):
         r["k"]: r["val"] for r in writers[0].read(spark, "t").collect()
     }
     assert final == model
+
+
+@pytest.mark.parametrize("partition_key", ["k", None])
+def test_merge_refuses_a_commit_after_its_base(spark, tmp_path, monkeypatch, partition_key):
+    """A second writer that commits after ``merge`` resolved its base
+    version must not be overwritten: the merge claims ``base + 1`` and
+    raises ConcurrentWriteError, and the second writer's rows survive."""
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
+        ConcurrentWriteError,
+    )
+
+    root = str(tmp_path / "s")
+    a, b = ParquetTableStore(root), ParquetTableStore(root)
+    base = spark.createDataFrame([(k, 0) for k in range(10)], "k long, val long")
+    a.overwrite("t", base, partition_key=partition_key, n_buckets=4)
+    other = spark.createDataFrame([(k, 2) for k in range(5, 15)], "k long, val long")
+    ups = spark.createDataFrame([(1, 1), (20, 1)], "k long, val long")
+
+    # the first pointer read resolves v1, then writer b commits v2
+    real = a.current_version
+    state = {"first": True}
+
+    def racing_current_version(name):
+        v = real(name)
+        if state.pop("first", False):
+            b.merge(spark, "t", other, other.select("k"))
+        return v
+
+    monkeypatch.setattr(a, "current_version", racing_current_version)
+    with pytest.raises(ConcurrentWriteError):
+        a.merge(spark, "t", ups, ups.select("k"))
+    monkeypatch.undo()
+    assert a.current_version("t") == 2
+    want = {k: 0 for k in range(5)} | {k: 2 for k in range(5, 15)}
+    assert {r["k"]: r["val"] for r in a.read(spark, "t").collect()} == want
 
 
 def test_gc_aged_claim_cannot_resurrect_old_version(spark, tmp_path):
